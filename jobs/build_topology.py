@@ -38,11 +38,10 @@ def main(argv=None) -> int:
                          "mode")
     args = ap.parse_args(argv)
 
-    from pyspark.sql import SparkSession
-
+    from topojson_spark.session import get_spark
     from topojson_spark.topology import Topology, read_tables
 
-    spark = SparkSession.builder.appName("topojson_build").getOrCreate()
+    spark = get_spark("topojson_build")
     spark.sparkContext.setLogLevel("WARN")
 
     if args.resume:

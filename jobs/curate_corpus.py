@@ -53,7 +53,6 @@ def main(argv=None) -> int:
                     help="skip intermediate funnel counts (single-pass)")
     args = ap.parse_args(argv)
 
-    from pyspark.sql import SparkSession
     from pyspark.sql import functions as F
 
     from topojson_spark.functions.curation import (
@@ -71,8 +70,9 @@ def main(argv=None) -> int:
     )
     from topojson_spark.plans.metrics import StageMetrics
     from topojson_spark.plans.pin import pin
+    from topojson_spark.session import get_spark
 
-    spark = SparkSession.builder.appName("corpus_curate").getOrCreate()
+    spark = get_spark("corpus_curate")
     spark.sparkContext.setLogLevel("WARN")
     metrics = StageMetrics()
 

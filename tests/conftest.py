@@ -1,12 +1,15 @@
 import pytest
 from pyspark.sql import SparkSession
 
+from topojson_spark.session import worker_daemon_conf
+
 
 @pytest.fixture(scope="session")
 def spark():
     s = (
         SparkSession.builder.appName("topojson_spark_tests")
         .master("local[4]")
+        .config(map=worker_daemon_conf("local[4]"))
         .config("spark.sql.shuffle.partitions", "4")
         .config("spark.default.parallelism", "4")
         .config("spark.sql.adaptive.enabled", "true")
