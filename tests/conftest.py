@@ -1,7 +1,7 @@
 import pytest
 from pyspark.sql import SparkSession
 
-from topojson_spark.session import worker_daemon_conf
+from topojson_spark.session import default_driver_mem, worker_daemon_conf
 
 
 @pytest.fixture(scope="session")
@@ -16,7 +16,7 @@ def spark():
         .config("spark.sql.maxPlanStringLength", "100000")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", "8g")
+        .config("spark.driver.memory", default_driver_mem())
         .getOrCreate()
     )
     yield s

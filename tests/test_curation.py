@@ -264,54 +264,55 @@ def test_prefix_sum_empty_and_single_row(spark):
 
 
 def test_dense_index_lazy_matches_eager(spark):
-    """The zero-collect bucketed mint must assign the IDENTICAL ids as the
-    two-phase range-partition machinery (ties, negatives, key_cols)."""
+    """The two-phase range-partition mint assigns each row its rank in the
+    total order (ties on the lead, negatives, NULL leads first), and the
+    narrow key_cols path gives the same ids. (The name dates from the
+    bucketed mint this test once cross-checked; a Python rank of the same
+    order is now the reference.)"""
     import random
 
-    from topojson_spark.plans.ids import dense_index, dense_index_lazy
+    from topojson_spark.plans.ids import dense_index
 
     random.seed(7)
     rows = [
         (random.randint(-50, 50), random.randint(0, 5), f"k{i}")
         for i in range(1000)
     ]
-    # NULL leads sort FIRST under both the eager range partitioner and the
-    # lazy bucketing's explicit NULL bucket
+    # NULL leads sort FIRST under Spark's default ascending order
     rows += [(None, i % 3, f"n{i}") for i in range(20)]
     df = spark.createDataFrame(rows, "a long, b int, k string").repartition(7)
     order = ["a", "b", "k"]
-    eager = {
+    ranked = sorted(
+        rows, key=lambda r: (r[0] is not None, r[0] or 0, r[1], r[2])
+    )
+    want = {r[2]: i for i, r in enumerate(ranked)}
+    got = {r["k"]: r["idx"] for r in dense_index(df, order).collect()}
+    assert got == want and len(got) == 1020
+    assert max(got[f"n{i}"] for i in range(20)) < 20  # NULLs first
+    narrow = {
         r["k"]: r["idx"]
-        for r in dense_index(df, order, mode="eager").collect()
+        for r in dense_index(df, order, key_cols=["k"]).collect()
     }
-    lazy = {r["k"]: r["idx"] for r in dense_index_lazy(df, order).collect()}
-    assert lazy == eager and len(lazy) == 1020
-    assert max(lazy[f"n{i}"] for i in range(20)) < 20  # NULLs first
-    # narrow key_cols path dispatches identically
-    lazy_k = {
-        r["k"]: r["idx"]
-        for r in dense_index(df, order, key_cols=["k"], mode="lazy").collect()
-    }
-    assert lazy_k == eager
+    assert narrow == want
 
 
 def test_dense_index_lazy_degenerate_inputs(spark):
-    from topojson_spark.plans.ids import dense_index, dense_index_lazy
+    """Constant, empty and string-led inputs still mint dense ids."""
+    from topojson_spark.plans.ids import dense_index
 
-    # constant leading column: every row lands in one bucket, ids still
-    # dense and ordered by the remaining cols
+    # constant leading column: ids still dense and ordered by the
+    # remaining cols
     const = spark.createDataFrame(
         [(1, i) for i in range(50)], "a long, b int"
     )
     got = sorted(
-        (r["b"], r["idx"]) for r in dense_index_lazy(const, ["a", "b"]).collect()
+        (r["b"], r["idx"]) for r in dense_index(const, ["a", "b"]).collect()
     )
     assert got == [(i, i) for i in range(50)]
     empty = spark.createDataFrame([], "a long, b int")
-    assert dense_index_lazy(empty, ["a", "b"]).count() == 0
-    # string lead cannot bucket numerically -> dispatch falls back to eager
+    assert dense_index(empty, ["a", "b"]).count() == 0
     s = dense_index(
-        spark.createDataFrame([("b",), ("a",)], "s string"), ["s"], mode="lazy"
+        spark.createDataFrame([("b",), ("a",)], "s string"), ["s"]
     ).collect()
     assert sorted((r["s"], r["idx"]) for r in s) == [("a", 0), ("b", 1)]
 

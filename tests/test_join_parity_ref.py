@@ -12,10 +12,19 @@ Coverage ledger: 46 executable rows + 4 skips below account for all 85
 reference test functions (35 of the 46 rows cover a plain+shared_paths
 pair; CASE 'true_for_junction_points' covers three reference tests: :9,
 :227 and :649 pin the same data/mode with successively stronger asserts).
+Two more rows add no function to that count:
+'undefined_for_non_junction_points' pins the :16 assert inside the :9
+function (a vertex-free overlap), and
+'diagonal_collinear_overlap_vertex_misaligned' is an engine case.
+
+Every row runs on both path-connected plans: ``cellgrouped`` (what every
+normally-sized corpus runs) and ``relational`` (the giant-line
+escalation, forced by lowering GIANT_LINE_PTS below any line's size).
 """
 
 import pytest
 
+from topojson_spark.operators import join as J
 from topojson_spark.topology import Topology
 
 STAGE = dict(prequantize=False, winding_order=None)
@@ -46,6 +55,14 @@ CASES = {
         ":9 (no junction at 1,0 is superseded by :227/:649 exact set — the "
         ":9 assert predates the v1.10 default flip and only checks (1,0) "
         "via MultiPoint membership of the *path* junction set)",
+    ),
+    "undefined_for_non_junction_points": (
+        {"cba": L((2, 0), (1, 0), (0, 0)), "ab": L((0, 0), (2, 0))},
+        {},
+        [],
+        ":16 (the reference asserts only that B=(1,0) is not a junction; ab "
+        "has no (1,0) vertex and is path-equal to cba, so the pair is "
+        "skipped and the set is empty)",
     ),
     "duplicate_lines": (
         {
@@ -153,7 +170,7 @@ CASES = {
         },
         {},
         4,
-        ":238/:661",
+        ":238/:661 (:686-702, the twin's body, asserts the same count)",
     ),
     "more_than_two_lines": (
         {
@@ -412,7 +429,7 @@ CASES = {
         },
         {},
         2,
-        ":1045",
+        ":1045 (assert at :1049)",
     ),
     "multi_shared_paths_are_connected": (
         {
@@ -425,7 +442,7 @@ CASES = {
         },
         {},
         3,
-        ":1060",
+        ":1060 (assert at :1064)",
     ),
     "multi_shared_paths_form_geometrycollection": (
         {
@@ -440,18 +457,27 @@ CASES = {
         },
         {},
         2,
-        ":1077",
+        ":1077 (assert at :1078)",
+    ),
+    # engine case, no reference counterpart: a vertex-misaligned collinear
+    # overlap on a long diagonal. The relational plan finds it from a
+    # shared fine-grid cell of its x-slab segment rasterization.
+    "diagonal_collinear_overlap_vertex_misaligned": (
+        {"long": L((0, 0), (1000, 1000)), "short": L((400, 400), (600, 600))},
+        {},
+        [(400.0, 400.0), (600.0, 600.0)],
+        "engine",
     ),
 }
 
 
-@pytest.mark.parametrize("engine", ["cellgrouped", "pairwise", "relational"])
+@pytest.mark.parametrize("engine", ["cellgrouped", "relational"])
 @pytest.mark.parametrize("name", sorted(CASES))
-def test_ref_join_case(spark, name, engine):
+def test_ref_join_case(spark, monkeypatch, name, engine):
     data, kw, expected, _ref = CASES[name]
-    t = Topology(
-        data, spark=spark, junction_engine=engine, **{**STAGE, **kw}
-    )
+    if engine == "relational":
+        monkeypatch.setattr(J, "GIANT_LINE_PTS", -1)
+    t = Topology(data, spark=spark, **{**STAGE, **kw})
     got = t.junction_points()
     if isinstance(expected, int):
         assert len(got) == expected
@@ -466,7 +492,7 @@ def test_ref_join_point_bbox(spark):
         spark=spark,
         **STAGE,
     )
-    assert tuple(t.bbox) == (0.5, 0.5, 0.5, 0.5)
+    assert t.bbox == (0.5, 0.5, 0.5, 0.5)
 
 
 def test_ref_join_prequantize_points_bbox(spark):
@@ -480,4 +506,5 @@ def test_ref_join_prequantize_points_bbox(spark):
         prequantize=True,
         winding_order=None,
     )
-    assert tuple(t.bbox) == (-0.5, 0.0, 1.0, 1.5)
+    assert t.bbox == (-0.5, 0.0, 1.0, 1.5)
+

@@ -5,7 +5,7 @@ shared by *many* lines, so a single cell group holds k lines and the pair
 set is O(k^2). The cellgrouped engine must (a) survive that cell at
 bounded memory — blocked triangular enumeration, never O(k^2) scratch
 (join.py _PAIR_BLOCK) — and (b) produce exactly the same junction set as
-the independent pairwise engine and as its own fast (un-blocked) path.
+the independent relational engine and as its own fast (un-blocked) path.
 
 Reference behavior family: /root/reference/tests/test_join.py:475-527
 (self-intersection / shared-segment density), here at ~100x density.
@@ -15,6 +15,7 @@ import time
 
 import pytest
 
+from topojson_spark.operators import join as J
 from topojson_spark.topology import Topology
 
 STAGE = dict(prequantize=False, winding_order=None)
@@ -40,9 +41,7 @@ def _corridor_data():
 def corridor_junctions_fast(spark):
     """Expected junction set: the cellgrouped engine's un-blocked (triu)
     path on the corridor corpus."""
-    t = Topology(
-        _corridor_data(), spark=spark, junction_engine="cellgrouped", **STAGE
-    )
+    t = Topology(_corridor_data(), spark=spark, **STAGE)
     pts = sorted(map(tuple, t.junction_points()))
     # sanity: the corpus is genuinely junction-dense (every interior
     # overlap boundary is a chain endpoint)
@@ -57,11 +56,9 @@ def test_hot_cell_blocked_enumeration_matches_fast_path(
     cell) and require the identical junction set, within a wall-time
     canary — proving the O(_PAIR_BLOCK)-memory path is semantics- and
     order-preserving, not just non-crashing."""
-    monkeypatch.setenv("SPARK_GRAFT_PAIR_BLOCK", "64")
+    monkeypatch.setattr(J, "_PAIR_BLOCK", 64)
     t0 = time.monotonic()
-    t = Topology(
-        _corridor_data(), spark=spark, junction_engine="cellgrouped", **STAGE
-    )
+    t = Topology(_corridor_data(), spark=spark, **STAGE)
     pts = sorted(map(tuple, t.junction_points()))
     elapsed = time.monotonic() - t0
     assert pts == corridor_junctions_fast
@@ -70,11 +67,13 @@ def test_hot_cell_blocked_enumeration_matches_fast_path(
     assert elapsed < 300, f"hot-cell blocked sweep took {elapsed:.0f}s"
 
 
-def test_hot_cell_pairwise_engine_agrees(spark, corridor_junctions_fast):
-    """Independent engine cross-check on the same skew corpus."""
-    t = Topology(
-        _corridor_data(), spark=spark, junction_engine="pairwise", **STAGE
-    )
+def test_hot_cell_relational_engine_agrees(
+    spark, monkeypatch, corridor_junctions_fast
+):
+    """Independent engine cross-check on the same skew corpus: the
+    giant-line escalation, forced by lowering its threshold."""
+    monkeypatch.setattr(J, "GIANT_LINE_PTS", -1)
+    t = Topology(_corridor_data(), spark=spark, **STAGE)
     assert sorted(map(tuple, t.junction_points())) == corridor_junctions_fast
 
 

@@ -446,25 +446,3 @@ def test_svg_and_geo_interface(spark):
         t.to_gdf()
     with _pytest.raises(ImportError):
         t.to_alt()
-
-
-def test_topology_stage_pin_columnar_hatch(spark, monkeypatch):
-    """SPARK_GRAFT_STAGE_PIN=columnar (the column-pruning A/B form of the
-    wide stage pins: extract.unified, cut.parts, dedup.arcs_final) must
-    produce the identical topology as the default checkpoint pin — the
-    hatch is kept as the measured alternative (see pin_stage docstring for
-    why checkpoint won the pipeline-level A/B)."""
-    data = {
-        "abc": {
-            "type": "Polygon",
-            "coordinates": [[[0, 0], [1, 0], [1, 1], [0, 1], [0, 0]]],
-        },
-        "def": {
-            "type": "Polygon",
-            "coordinates": [[[1, 0], [2, 0], [2, 1], [1, 1], [1, 0]]],
-        },
-    }
-    want = Topology(data, spark=spark).to_dict()
-    monkeypatch.setenv("SPARK_GRAFT_STAGE_PIN", "columnar")
-    got = Topology(data, spark=spark).to_dict()
-    assert got == want

@@ -11,7 +11,6 @@ from Arrow-batched pandas UDFs, never per-row Spark Python UDFs.
 
 from __future__ import annotations
 
-import hashlib
 from typing import List, Optional, Sequence, Tuple
 
 import numpy as np
@@ -290,12 +289,6 @@ def canonical_dup_bytes(coords: np.ndarray) -> bytes:
     else:
         c = np.sort(c, axis=0)
     return c.tobytes()
-
-
-def canonical_dup_digest(coords: np.ndarray) -> int:
-    """Signed int64 digest of the canonical byte form (sha1 truncation)."""
-    h = hashlib.sha1(canonical_dup_bytes(coords)).digest()
-    return int.from_bytes(h[:8], "little", signed=True)
 
 
 # ---------------------------------------------------------------- path equality
@@ -907,13 +900,3 @@ def clip_polylines_to_rects_batch(
     idx = np.arange(len(piece_pair), dtype=np.int64)
     piece_seq = idx - np.maximum.accumulate(np.where(new_pair, idx, 0))
     return piece_pair, piece_seq, piece_offsets, out_flat
-
-
-def bbox_of(coords: np.ndarray) -> Tuple[float, float, float, float]:
-    c = np.asarray(coords, dtype=np.float64)
-    return (
-        float(np.nanmin(c[:, 0])),
-        float(np.nanmin(c[:, 1])),
-        float(np.nanmax(c[:, 0])),
-        float(np.nanmax(c[:, 1])),
-    )

@@ -164,7 +164,7 @@ def cosine_neardup_pairs(
     # pair enumeration, capping and dedup all run over NARROW
     # (id, band, val) tuples; the embedding vectors join in once per pair
     # side at the end — never duplicated per band and never dragged
-    # through the cap's rank window (candidate_pairs pattern)
+    # through the cap's rank window
     base = embeddings.select(F.col(id_col), F.col(vec_col), *band_vals)
     banded = base.select(
         id_col,

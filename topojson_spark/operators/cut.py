@@ -37,7 +37,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..functions import kernels as K
-from ..plans.pin import pin, pin_stage
+from ..plans.pin import pin, pin_truncate
 
 PARTS_SCHEMA = T.StructType(
     [
@@ -259,7 +259,7 @@ def cut_stage(
         if cell is None or cell <= 0:
             cell = span / 64 if span > 0 else 1.0
         elif span > 0:
-            # same envelope-sized-cell floor as candidate_pairs
+            # same envelope-sized-cell floor as join._cell_size
             cell = max(cell, span / 4096)
         from .join import _with_bbox_cells
 
@@ -295,11 +295,9 @@ def cut_stage(
 
     # pin the distinct-arc table: it is read by refs expansion, dedup digest
     # and the kept-coords lookup; without the pin every consumer re-runs the
-    # whole digest+splitter+split cascade. pin_stage = checkpoint by
-    # default; the columnar-cache alternative (narrow consumers could
-    # prune the coords batches) was measured and rejected at pipeline
-    # level — see pin_stage's docstring for both sides of the A/B.
-    parts = pin_stage(parts)
+    # whole digest+splitter+split cascade (checkpoint, not the columnar
+    # cache: see pin_truncate's docstring).
+    parts = pin_truncate(parts)
     line_refs = lines.drop("coords", "x0", "y0", "x1", "y1")
     return parts, line_refs
 

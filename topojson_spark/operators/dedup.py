@@ -50,7 +50,7 @@ from pyspark.sql import types as T
 
 from ..functions import kernels as K
 from ..plans.ids import dense_index
-from ..plans.pin import pin, pin_stage, pin_truncate
+from ..plans.pin import pin, pin_truncate
 from .cut import _SUMMARY_COLS, part_summary
 
 _POS = ["feature_seq", "unit_seq", "ring_seq", "split_seq"]
@@ -374,9 +374,7 @@ def dedup_stage(parts: DataFrame, line_refs: DataFrame):
     # pinned HERE, once: both the pmap summary join below and every
     # downstream consumer (Topology.arcs, exports) read this same store —
     # pinning later would compute the survivor join + dense ranking twice.
-    # pin_stage = checkpoint by default (columnar measured + rejected at
-    # pipeline level; see its docstring).
-    arcs_final = pin_stage(
+    arcs_final = pin_truncate(
         arcs_final.select(
             "kept", "final_idx", "is_shared", "coords", *_SUMMARY_COLS
         )

@@ -415,12 +415,10 @@ def extract(
     if not unified.isStreaming:
         # pin the unified parse so every downstream branch (lines / points /
         # features) reads the parse output instead of re-parsing JSON, and
-        # downstream plan analysis stays O(stage). pin_stage = checkpoint
-        # by default; the columnar-cache alternative was measured and
-        # rejected at pipeline level (see pin_stage's docstring).
-        from ..plans.pin import pin_stage
+        # downstream plan analysis stays O(stage).
+        from ..plans.pin import pin_truncate
 
-        unified = pin_stage(unified)
+        unified = pin_truncate(unified)
     if metrics is not None and not unified.isStreaming:
         # observed AFTER the lineage truncation: a CollectMetrics node below
         # a checkpoint boundary never publishes (the RDD materialization is

@@ -67,19 +67,6 @@ def _hash_order(arc_ids: np.ndarray, shared_bool: np.ndarray):
     return order_of_arc, split_arc_ids
 
 
-def backward_arcs(
-    arc_ids: List[int],
-    shared: List[bool],
-    info_by_id: dict,
-    inner: bool,
-    winding_order: Optional[str],
-) -> List[int]:
-    """Port of hashmap.py:198-311 (see backward_arcs_core); resolves the
-    order-3 winding for one ring polarity."""
-    out, order = backward_arcs_core(arc_ids, shared, info_by_id)
-    return resolve_ring_winding(out, order, info_by_id, inner, winding_order)
-
-
 def resolve_ring_winding(
     out: List[int],
     order: int,

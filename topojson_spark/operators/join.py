@@ -12,16 +12,16 @@ Re-expresses /root/reference/topojson/core/join.py:91-231 Spark-first:
   explode + two-level groupBy on quantized vertex keys — the north rule's
   "global groupBy on quantized coordinate hashes". Entirely JVM-side.
 - junctions, path-connected (``shared_coords=False``, the reference default,
-  join.py:200-226): envelope-overlap candidate pairs via a grid-cell
-  self-join (replacing the STRtree of ops.py:575-610), per-pair collinear
+  join.py:200-226): envelope-overlap candidate pairs enumerated per grid
+  cell (replacing the STRtree of ops.py:575-610), per-pair collinear
   overlap + linemerge in an Arrow UDF (replacing shapely
   intersection/linemerge), junctions = endpoints of merged pieces.
+  Corpora whose longest line exceeds GIANT_LINE_PTS vertices escalate to a
+  segment-level relational plan of the same semantics.
 """
 
 from __future__ import annotations
 
-import math
-import os
 from typing import Iterator, Optional, Tuple
 
 import numpy as np
@@ -58,10 +58,9 @@ def compute_bbox_stats(
     """One global aggregation returning ((minx, miny, maxx, maxy),
     (avg_w, avg_h), max_line_pts).
 
-    max_line_pts (the longest line's vertex count) feeds the junction-
-    engine auto-selection: the pairwise engine holds both lines of a
-    candidate pair in one task, so giant lines escalate to the
-    segment-relational engine.
+    max_line_pts (the longest line's vertex count) feeds the giant-line
+    escalation: a cellgrouped task holds whole lines of a cell, so giant
+    lines escalate to the segment-relational engine.
 
     cell_hint is the mean line-envelope extent (max of width/height means).
     The grid-cell self-joins (candidate pairs, junction->line assignment)
@@ -113,11 +112,6 @@ def compute_bbox_stats(
     if max(avg) <= 0:
         return bbox, None, max_pts
     return bbox, avg, max_pts
-
-
-def compute_bbox(lines: DataFrame, points: DataFrame) -> Optional[Tuple]:
-    """(minx, miny, maxx, maxy) over all line vertices and points."""
-    return compute_bbox_stats(lines, points)[0]
 
 
 # ------------------------------------------------------------ per-line UDFs
@@ -248,137 +242,6 @@ def _with_bbox_cells(lines: DataFrame, bbox: Tuple, cell: float) -> DataFrame:
     )
 
 
-def candidate_pairs(
-    lines: DataFrame, bbox: Tuple, cell: Optional[float] = None
-) -> DataFrame:
-    """Envelope-overlap line pairs (lid_a < lid_b) via grid-cell self-join —
-    the distributed replacement for select_unique_combs (ops.py:575-610).
-
-    ``lines`` must carry a unique long ``lid``, ``coords`` and the fused
-    envelope columns (x0, y0, x1, y1); the returned frame has
-    (lid_a, coords_a, lid_b, coords_b), each pair exactly once.
-    """
-    cell = _cell_size(bbox, cell)
-    # pair enumeration and dedup run over *ids + envelopes only*; the heavy
-    # coordinate arrays are joined in once per surviving pair (shuffle bytes
-    # stay proportional to the pair list, not to pair-multiplicity x coords).
-    # Envelopes come from the fused extract annotations.
-    env = lines.select("lid", "x0", "y0", "x1", "y1")
-    cells = (
-        env.withColumn(
-            "cx",
-            F.explode(
-                F.sequence(
-                    F.floor((F.col("x0") - F.lit(bbox[0])) / F.lit(cell)),
-                    F.floor((F.col("x1") - F.lit(bbox[0])) / F.lit(cell)),
-                )
-            ),
-        )
-        .withColumn(
-            "cy",
-            F.explode(
-                F.sequence(
-                    F.floor((F.col("y0") - F.lit(bbox[1])) / F.lit(cell)),
-                    F.floor((F.col("y1") - F.lit(bbox[1])) / F.lit(cell)),
-                )
-            ),
-        )
-        .select("lid", "cx", "cy", "x0", "y0", "x1", "y1")
-    )
-    a = cells.select(
-        F.col("lid").alias("lid_a"),
-        "cx", "cy",
-        F.col("x0").alias("ax0"), F.col("y0").alias("ay0"),
-        F.col("x1").alias("ax1"), F.col("y1").alias("ay1"),
-    )
-    b = cells.select(
-        F.col("lid").alias("lid_b"),
-        "cx", "cy",
-        F.col("x0").alias("bx0"), F.col("y0").alias("by0"),
-        F.col("x1").alias("bx1"), F.col("y1").alias("by1"),
-    )
-    pair_ids = (
-        a.join(b, on=["cx", "cy"])
-        .where(F.col("lid_a") < F.col("lid_b"))
-        .where(
-            (F.col("ax0") <= F.col("bx1"))
-            & (F.col("bx0") <= F.col("ax1"))
-            & (F.col("ay0") <= F.col("by1"))
-            & (F.col("by0") <= F.col("ay1"))
-        )
-        .select("lid_a", "lid_b")
-        .dropDuplicates(["lid_a", "lid_b"])
-    )
-    coords_a = lines.select(
-        F.col("lid").alias("lid_a"), F.col("coords").alias("coords_a")
-    )
-    coords_b = lines.select(
-        F.col("lid").alias("lid_b"), F.col("coords").alias("coords_b")
-    )
-    return pair_ids.join(coords_a, on="lid_a").join(coords_b, on="lid_b")
-
-
-def junctions_path_connected_pairwise(
-    lines_with_lid: DataFrame, bbox: Tuple, cell: Optional[float] = None
-) -> DataFrame:
-    """Pairwise (Arrow-kernel) junction detection — the reference
-    implementation the relational engine below is validated against, and
-    the fallback for corpora that defeat its cell heuristics.
-
-    Candidate pairs -> drop path-equal pairs (shapely ``equals`` analog via
-    normalize_path) -> collinear overlap pieces -> linemerge -> endpoints.
-    Returns distinct (jx, jy). The path digest (``pdig``) and envelopes were
-    fused into the extract parse — no coordinate-carrying UDF pass here.
-    """
-    # semantics-preserving pre-dedup (join.py:207-210 skips equal pairs, and
-    # path-equal copies produce identical intersections with every other
-    # line) — one representative per path digest, so exact-duplicate-heavy
-    # corpora don't blow up the candidate self-join quadratically
-    reps = lines_with_lid.groupBy("pdig").agg(
-        F.min("lid").alias("lid"),
-        F.first("coords").alias("coords"),
-        F.first("x0").alias("x0"),
-        F.first("y0").alias("y0"),
-        F.first("x1").alias("x1"),
-        F.first("y1").alias("y1"),
-    )
-    # distinct representatives guarantee pdig_a != pdig_b for every pair
-    pairs = candidate_pairs(
-        reps.select("lid", "coords", "x0", "y0", "x1", "y1"), bbox, cell=cell
-    ).select("coords_a", "coords_b")
-
-    out_schema = T.StructType(
-        [T.StructField("jx", T.DoubleType()), T.StructField("jy", T.DoubleType())]
-    )
-
-    def find(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            pts = []
-            for a, b in zip(pdf["coords_a"], pdf["coords_b"]):
-                segs = K.line_pair_shared_segments(
-                    K.as_np(a),
-                    K.as_np(b),
-                )
-                if len(segs):
-                    pts.append(K.shared_chain_endpoints(segs))
-            if pts:
-                allp = np.concatenate(pts)
-                yield pd.DataFrame({"jx": allp[:, 0], "jy": allp[:, 1]})
-            else:
-                yield pd.DataFrame(
-                    {
-                        "jx": pd.Series([], dtype="float64"),
-                        "jy": pd.Series([], dtype="float64"),
-                    }
-                )
-
-    raw = pairs.mapInPandas(find, schema=out_schema)
-    # exact-equality dedup (the reference keeps set() of raw float tuples,
-    # join.py:219-226); chain endpoints are copies of input vertices, so
-    # bit-exact equality is the right merge key
-    return raw.dropDuplicates(["jx", "jy"])
-
-
 def _cell_size(bbox: Tuple, cell: Optional[float]) -> float:
     """Shared grid-cell sizing for the junction engines: default span/64,
     and never let envelope-sized cells shatter a tiny-extent corpus into a
@@ -394,34 +257,24 @@ def _cell_size(bbox: Tuple, cell: Optional[float]) -> float:
 def junctions_path_connected_cellgrouped(
     lines_with_lid: DataFrame, bbox: Tuple, cell: Optional[float] = None
 ) -> DataFrame:
-    """Cell-grouped junction detection — same pair semantics as the
-    pairwise engine (same kernels, validated on the same reference ledger),
-    restructured so each line's coordinate array crosses the wire once per
-    grid CELL it touches instead of once per candidate PAIR.
+    """Cell-grouped junction detection: envelope-overlap candidate pairs
+    (the distributed replacement for select_unique_combs, ops.py:575-610)
+    fed to the per-pair collinear-overlap kernel, with each line's
+    coordinate array crossing the wire once per grid CELL it touches
+    instead of once per candidate PAIR.
 
     Plan shape (the 100 TB rationale):
 
     1. Representative selection never moves coords: a digest-only
        ``groupBy(pdig).agg(min(lid))`` (narrow tuples) followed by a
        broadcast semi-join marks one deterministic representative per
-       spatial path. The pairwise engine's ``groupBy(pdig)`` ships every
-       coordinate array through the exchange just to pick one.
+       spatial path (path-equal copies produce identical intersections
+       with every other line, join.py:207-210).
     2. ONE wide exchange: representatives explode to the envelope's grid
        cells (multiplicity ~(1 + w/cell)^2, typically 2-4) and hash-
-       repartition by (cx, cy) + sort within partitions. The pairwise plan
+       repartition by (cx, cy) + sort within partitions. A per-pair plan
        moves coords through TWO wide shuffle joins with multiplicity = the
-       pair fan-out (the neighbor count). MEASURED crossover
-       (tools/bench_junction_engines.py, 40k docs, 16 cores, round 5):
-       on the low-adjacency mosaic the byte advantage is regime-dependent
-       — dense grid: cellgrouped 9.2 s / 225 MB shuffled vs pairwise
-       10.4 s / 211 MB read (wall win, byte parity); sparse grid (each
-       rep overlapping many cells): cellgrouped 4.8 MB vs pairwise
-       14.5 MB read (3x fewer bytes) but 14.0 s vs 7.3 s wall (fewer,
-       larger cell groups balance worse). Relational: 6x slower and ~7x
-       the bytes at both densities. cellgrouped stays the default for the
-       dense/adjacency-heavy regime that dominates at corpus scale;
-       SPARK_GRAFT_JUNCTION_ENGINE=pairwise is the right pick for sparse
-       few-big-cells corpora.
+       pair fan-out (the neighbor count).
     3. Pair enumeration happens INSIDE the Arrow worker: per cell,
        envelope-overlap candidates via a vectorized triangular mask, each
        pair processed exactly once at its canonical cell — the cell of
@@ -434,29 +287,21 @@ def junctions_path_connected_cellgrouped(
     O(k^2) candidate PAIRS (that is the problem statement), but scratch
     memory is capped at O(_PAIR_BLOCK) by blocked triangular enumeration —
     a 1e5-line cell costs ~4 MB of mask scratch, not ~80 GB of
-    triu_indices. Wall-time skew from such a cell remains; corpora built
-    from genuinely giant/dense geometry auto-escalate to the
-    ``relational`` engine (segment-level parallelism), and
-    SPARK_GRAFT_JUNCTION_ENGINE=pairwise|relational is the explicit
-    escape hatch.
+    triu_indices. Wall-time skew from such a cell remains; corpora with
+    giant lines auto-escalate to the ``relational`` engine (segment-level
+    parallelism).
 
     Returns distinct (jx, jy).
     """
     cell = _cell_size(bbox, cell)
     bx, by = bbox[0], bbox[1]
-    # captured by VALUE into the Arrow closure (driver-side read), so the
-    # env override reaches executors and tests can force the blocked path
-    pair_block = int(
-        os.environ.get("SPARK_GRAFT_PAIR_BLOCK", _PAIR_BLOCK)
-    )
+    # captured by VALUE into the Arrow closure (driver-side read), so a
+    # test that patches the module constant reaches the executors
+    pair_block = _PAIR_BLOCK
 
     rep_ids = lines_with_lid.groupBy("pdig").agg(F.min("lid").alias("lid"))
-    # broadcast is right up to ~10^8 distinct paths (8B ids); beyond that
-    # flip to a shuffle semi-join (SPARK_GRAFT_BROADCAST_REPS=0) — the one
-    # extra coords pass it costs is still cheaper than pairwise's two
-    rep_side = rep_ids.select("lid")
-    if os.environ.get("SPARK_GRAFT_BROADCAST_REPS", "1") != "0":
-        rep_side = F.broadcast(rep_side)
+    # broadcast is right up to ~10^8 distinct paths (8B ids)
+    rep_side = F.broadcast(rep_ids.select("lid"))
     reps = lines_with_lid.join(rep_side, on="lid", how="leftsemi").select(
         "lid", "coords", "x0", "y0", "x1", "y1"
     )
@@ -700,10 +545,10 @@ _T2_SCHEMA = T.StructType(
 )
 
 
-# A pairwise-engine task holds both lines of a candidate pair (plus the
-# numpy sweep's intermediates) in one Python worker; beyond ~256k vertices
-# per line that risks per-task OOM and stragglers, so auto-selection
-# escalates to the segment-relational engine.
+# A cellgrouped task holds whole lines of a cell (plus the numpy sweep's
+# intermediates) in one Python worker; beyond ~256k vertices per line that
+# risks per-task OOM and stragglers, so such corpora escalate to the
+# segment-relational engine.
 GIANT_LINE_PTS = 262_144
 
 
@@ -711,54 +556,29 @@ def junctions_path_connected(
     lines_with_lid: DataFrame,
     bbox: Tuple,
     cell: Optional[float] = None,
-    engine: Optional[str] = None,
     max_line_pts: int = 0,
 ) -> DataFrame:
-    """Path-connected junction detection (reference join.py:200-226):
-    dispatch between the three engines.
+    """Path-connected junction detection (reference join.py:200-226).
 
-    - ``cellgrouped`` (default for normally-sized lines): grid-cell
-      grouping, pair enumeration INSIDE the Arrow worker — one coords
-      exchange at cell multiplicity (~2-4x) instead of pair multiplicity.
-      Same kernels and pair semantics as ``pairwise``; measured crossover
-      vs pairwise is regime-dependent (see
-      junctions_path_connected_cellgrouped and
-      tools/bench_junction_engines.py): faster on dense-adjacency
-      corpora, 3x fewer shuffle bytes on sparse ones (where pairwise is
-      faster on wall time).
-    - ``pairwise``: grid-cell candidate pairs -> per-pair numpy sweep,
-      coords joined per pair. The engine ``cellgrouped`` was validated
-      against; kept as the explicit fallback.
-    - ``relational``: segment-level whole-stage-codegen plan. Several
-      narrow-tuple shuffles over O(total segments); slower here, but its
-      unit of parallelism is a SEGMENT, so corpora whose individual lines
-      are huge (a cell/pair task must hold whole lines) stay balanced.
-      Auto-selected when the longest line exceeds GIANT_LINE_PTS vertices.
-
-    ``engine`` (or SPARK_GRAFT_JUNCTION_ENGINE) forces one explicitly;
-    all are validated against the full reference junction suite.
+    Normally-sized lines run the ``cellgrouped`` plan: grid-cell grouping,
+    pair enumeration INSIDE the Arrow worker, one coords exchange at cell
+    multiplicity (~2-4x). When the longest line exceeds GIANT_LINE_PTS
+    vertices the ``relational`` plan runs instead: several narrow-tuple
+    shuffles over O(total segments), slower at normal sizes, but its unit
+    of parallelism is a SEGMENT, so corpora whose individual lines are
+    huge stay balanced. Both are validated against the full reference
+    junction suite.
     """
-    engine = engine or os.environ.get("SPARK_GRAFT_JUNCTION_ENGINE")
-    if engine is None:
-        engine = (
-            "relational" if max_line_pts > GIANT_LINE_PTS else "cellgrouped"
-        )
-    if engine == "cellgrouped":
-        return junctions_path_connected_cellgrouped(
-            lines_with_lid, bbox, cell
-        )
-    if engine == "pairwise":
-        return junctions_path_connected_pairwise(lines_with_lid, bbox, cell)
-    if engine != "relational":
-        raise ValueError(f"unknown junction engine: {engine!r}")
-    return junctions_path_connected_relational(lines_with_lid, bbox, cell)
+    if max_line_pts > GIANT_LINE_PTS:
+        return junctions_path_connected_relational(lines_with_lid, bbox, cell)
+    return junctions_path_connected_cellgrouped(lines_with_lid, bbox, cell)
 
 
 def junctions_path_connected_relational(
     lines_with_lid: DataFrame, bbox: Tuple, cell: Optional[float] = None
 ) -> DataFrame:
     """Path-connected junction detection (reference join.py:200-226) as a
-    RELATIONAL plan — the pairwise Arrow kernel re-expressed so the hot path
+    RELATIONAL plan — the per-pair Arrow kernel re-expressed so the hot path
     is whole-stage codegen; Python touches only the rare cycle-shaped pairs.
 
     Semantics mirrored 1:1 from line_pair_shared_segments +
@@ -1010,11 +830,7 @@ def join_stage(
                 ),
             )
             junctions = junctions_path_connected(
-                lines_lid,
-                qbbox,
-                cell=cell,
-                engine=options.junction_engine,
-                max_line_pts=max_pts,
+                lines_lid, qbbox, cell=cell, max_line_pts=max_pts
             )
 
     return lines, points, bbox, transform, junctions, cell

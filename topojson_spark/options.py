@@ -35,18 +35,7 @@ class TopoOptions:
     object_name: Union[str, Sequence[str]] = "data"
     ignore_index: bool = False
 
-    # engine-level knobs (no reference counterpart; scale/North-rule controls)
-    # path-connected junction engine: "pairwise" (grid candidate pairs ->
-    # Arrow kernel; one coords shuffle then CPU-bound — fastest and
-    # best-scaling when lines are small), "relational" (segment-level
-    # whole-stage-codegen plan; several narrow-tuple shuffles over O(total
-    # segments) — robust when single lines are huge, a pairwise task must
-    # hold both lines of a pair in memory), or None = auto (pairwise
-    # unless the longest line exceeds ~256k vertices).
-    junction_engine: Optional[str] = None
-    shuffle_partitions: int = 32
-    dedup_salt_buckets: int = 16  # salt width for the canonical-hash shuffle
-    cell_level: int = 8  # default cell-index level for the spatial layer
+    # engine-level options (no reference counterpart)
     checkpoint_dir: Optional[str] = None  # stage-output checkpointing root
     # with checkpoint_dir set: trust existing stage parquet (resume a
     # killed job from its last completed stage) instead of recomputing

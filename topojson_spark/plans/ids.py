@@ -15,12 +15,11 @@ No per-row Python, no single-partition shuffle; cost is one extra pass.
 
 from __future__ import annotations
 
-import os
 from typing import Iterator, Sequence
 
 import pandas as pd
 from pyspark import TaskContext
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -75,103 +74,15 @@ def prefix_sum(
     return arranged.mapInPandas(attach, schema=schema)
 
 
-def dense_index_lazy(
-    df: DataFrame,
-    order_cols: Sequence[str],
-    out_col: str = "idx",
-    num_partitions: int | None = None,
-    key_cols: Sequence[str] | None = None,
-) -> DataFrame:
-    """:func:`dense_index` semantics with ZERO driver actions — the whole
-    mint is one lazy plan, so it fuses into whichever downstream action
-    consumes it instead of forcing its own jobs (the eager form pays a
-    range-sample pass, a cache materialization and a per-partition-count
-    collect before anything downstream can run).
-
-    Monotonic fixed bucketing replaces the range exchange: the leading
-    order column's (min, span) — a broadcast 1-row aggregate — maps each
-    row to ``bucket = floor((lead - min)/span * n)`` (double math is
-    monotone non-decreasing in lead, and the result is clamped to n-1, so
-    bucket order always respects lead order; rows tied on lead share a
-    bucket and are fully ordered inside it). Per-bucket counts roll into
-    exclusive offsets with a window over the O(n)-row count table —
-    single-partition but tiny, never the corpus — broadcast back, and the
-    final id is ``offset + row_number() within bucket``, entirely
-    JVM-side (no Arrow round-trip). Skew bound: a bucket holds one lead
-    value's ties at worst the way a range partition would; a heavily
-    repeated lead value degrades toward one sorting task, same as the
-    eager form's range partitioner.
-
-    Requires a NUMERIC leading order column (callers with string leads
-    use the eager form — see the dispatch in :func:`dense_index`).
-    """
-    if key_cols:
-        narrow = df.select(*dict.fromkeys([*key_cols, *order_cols]))
-        ids = dense_index_lazy(narrow, order_cols, out_col, num_partitions)
-        return df.join(ids.select(*key_cols, out_col), on=list(key_cols))
-    n = 4 * (num_partitions or df.sparkSession.sparkContext.defaultParallelism)
-    lead = F.col(order_cols[0]).cast("double")
-    rng = df.agg(
-        F.min(lead).alias("_lo"),
-        (F.max(lead) - F.min(lead) + F.lit(1.0)).alias("_span"),
-    )
-    # NULL leads sort FIRST under Spark's default ordering (what the eager
-    # range partitioner does), so they get their own bucket BELOW every
-    # numeric one; without the explicit branch, least(NULL, n-1) would
-    # skip the NULL and fling NULL-lead rows into the LAST bucket
-    bucket = F.when(lead.isNull(), F.lit(-1)).otherwise(
-        F.least(
-            F.floor(
-                (lead - F.col("_lo")) / F.col("_span") * F.lit(float(n))
-            ),
-            F.lit(n - 1),
-        )
-    ).cast("long")
-    bucketed = (
-        df.crossJoin(F.broadcast(rng))
-        .withColumn("_bkt", bucket)
-        .drop("_lo", "_span")
-    )
-    counts = bucketed.groupBy("_bkt").agg(F.count(F.lit(1)).alias("_c"))
-    woff = Window.orderBy("_bkt").rowsBetween(Window.unboundedPreceding, -1)
-    offsets = counts.select(
-        "_bkt",
-        F.coalesce(F.sum("_c").over(woff), F.lit(0)).alias("_off"),
-    )
-    wrn = Window.partitionBy("_bkt").orderBy(*[F.col(c) for c in order_cols])
-    return (
-        bucketed.join(F.broadcast(offsets), on="_bkt")
-        .withColumn(
-            out_col,
-            (F.col("_off") + F.row_number().over(wrn) - F.lit(1)).cast("long"),
-        )
-        .drop("_bkt", "_off")
-    )
-
-
 def dense_index(
     df: DataFrame,
     order_cols: Sequence[str],
     out_col: str = "idx",
     num_partitions: int | None = None,
     key_cols: Sequence[str] | None = None,
-    mode: str | None = None,
 ) -> DataFrame:
     """Attach a dense 0-based long ``out_col`` following the total order of
     ``order_cols``. Deterministic for a given input dataset.
-
-    Dispatch: ``mode="lazy"`` / SPARK_GRAFT_DENSE_IDS=lazy selects the
-    fully-lazy bucketed mint (:func:`dense_index_lazy` — zero driver
-    collects) when the leading order column is numeric. Both modes
-    produce the identical id assignment (asserted in tests). Default is
-    the eager two-phase machinery below: MEASURED BOTH WAYS on the
-    topology pipeline (5k docs, local[16], fresh JVMs, 2 repeats each) —
-    lazy removes the two Python collects but its rng/offsets broadcast
-    subqueries run as 7 extra (tiny) Spark jobs, and end-to-end wall was
-    inside run-to-run noise (22.7/27.9 s eager vs 23.0/26.9 s lazy), so
-    the default keeps the simpler execution profile; the hatch stays for
-    driver-latency-bound deployments (many small topologies per session,
-    where per-job scheduling overhead dominates data work).
 
     With ``key_cols`` (a unique key), the two-phase machinery runs over a
     NARROW (key + order) projection and the ids join back on the key —
@@ -179,15 +90,9 @@ def dense_index(
     final hash join, instead of riding the range shuffle + cache + Arrow
     attach round-trip. Use whenever ``df`` carries payload wider than its
     keys; bytes moved per id minted drop by ~2 full passes of the frame."""
-    mode = mode or os.environ.get("SPARK_GRAFT_DENSE_IDS", "eager")
-    if mode == "lazy" and isinstance(
-        df.schema[order_cols[0]].dataType, T.NumericType
-    ):
-        return dense_index_lazy(df, order_cols, out_col, num_partitions, key_cols)
     if key_cols:
         narrow = df.select(*dict.fromkeys([*key_cols, *order_cols]))
-        ids = dense_index(narrow, order_cols, out_col, num_partitions,
-                          mode="eager")
+        ids = dense_index(narrow, order_cols, out_col, num_partitions)
         return df.join(
             ids.select(*key_cols, out_col), on=list(key_cols)
         )

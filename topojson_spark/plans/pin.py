@@ -68,47 +68,17 @@ def _pin_durable(df: DataFrame) -> DataFrame:
 
 
 def pin_truncate(df: DataFrame) -> DataFrame:
-    """Lazily persist AND truncate logical lineage (stage boundary)."""
+    """Lazily persist AND truncate logical lineage (stage boundary).
+
+    The wide stage outputs (extract.unified, cut.parts, dedup.arcs_final)
+    use this, not ``pin``: the columnar cache keeps lineage, and every
+    downstream action re-ran the exchanges behind it (measured at 20k
+    docs: 3x the stages and 3x the wall of this checkpoint)."""
     if getattr(_ctx, "root", None) and not df.isStreaming:
         return _pin_durable(df)
-    if os.environ.get("SPARK_GRAFT_NO_TRUNCATE"):
-        return pin(df)
-    # serialized pins (+ spark.rdd.compress) trade CPU for block bytes —
-    # the right trade when memory bandwidth, not compute, caps scaling
-    level = (
-        StorageLevel.MEMORY_AND_DISK
-        if os.environ.get("SPARK_GRAFT_PIN_SER")
-        else StorageLevel.MEMORY_AND_DISK_DESER
+    return df.localCheckpoint(
+        eager=False, storageLevel=StorageLevel.MEMORY_AND_DISK_DESER
     )
-    return df.localCheckpoint(eager=False, storageLevel=level)
-
-
-def pin_stage(df: DataFrame) -> DataFrame:
-    """Pin for the three WIDE stage outputs (extract.unified, cut.parts,
-    dedup.arcs_final). Default: ``pin_truncate`` (row-format checkpoint +
-    lineage truncation). SPARK_GRAFT_STAGE_PIN=columnar switches them to
-    the SQL columnar cache — an A/B hatch kept because the hypothesis is
-    attractive and was MEASURED BOTH WAYS (round 5):
-
-    - For it: InMemoryRelation supports column pruning — narrow consumers
-      of a wide store skip the coords/template batches, and the isolated
-      cut-stage replay improved (4->16 efficiency 0.62 -> 0.73,
-      tools/profile_cut.py, 160k docs).
-    - Against it, decisively: at PIPELINE level the un-truncated lineage
-      triples the downstream stage count (every dedup/hashmap action
-      re-executes the exchanges between the cache and its own output,
-      where a checkpoint's ExistingRDD had frozen them) — measured
-      dedup+hashmap at 20k docs/local[16]: 33 stages / 120 task-seconds
-      (checkpoint) vs 99 stages / 439 task-seconds (columnar), 3x wall.
-      The per-scan decode saving never comes close to paying for the
-      re-executed exchanges.
-
-    ``durable_stage_checkpoints`` scopes upgrade either form to parquet."""
-    if os.environ.get("SPARK_GRAFT_STAGE_PIN", "checkpoint") == "columnar":
-        if getattr(_ctx, "root", None) and not df.isStreaming:
-            return _pin_durable(df)
-        return pin(df)
-    return pin_truncate(df)
 
 
 def release_pins(spark) -> int:

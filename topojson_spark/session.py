@@ -120,12 +120,8 @@ def get_spark(
         "spark.sql.maxPlanStringLength": "100000",
         "spark.sql.execution.arrow.pyspark.enabled": "true",
         "spark.sql.execution.arrow.maxRecordsPerBatch": "10000",
-        # block/shuffle codec: on memory-bandwidth-starved hosts a stronger
-        # codec trades (well-scaling) CPU for (non-scaling) bytes moved
-        "spark.io.compression.codec": os.environ.get(
-            "SPARK_GRAFT_IO_CODEC", "lz4"
-        ),
-        "spark.rdd.compress": os.environ.get("SPARK_GRAFT_RDD_COMPRESS", "false"),
+        "spark.io.compression.codec": "lz4",
+        "spark.rdd.compress": "false",
         "spark.driver.memory": os.environ.get(
             "SPARK_GRAFT_DRIVER_MEM", default_driver_mem()
         ),

@@ -175,15 +175,6 @@ def generate_documents(
     return base.mapInPandas(gen, schema=DOCUMENTS_SCHEMA)
 
 
-def write_documents(
-    spark: SparkSession, path: str, n_docs: int, grid_w: int = 8, grid_h: int = 8,
-    seed: int = 42,
-) -> None:
-    generate_documents(spark, n_docs, grid_w, grid_h, seed).write.mode(
-        "overwrite"
-    ).parquet(path)
-
-
 def span_manifest(spark: SparkSession, documents: DataFrame) -> DataFrame:
     """Flat span view used for the driver's span-sequence-equality invariant:
     (doc_id, span_ix, kind, text, media_ref, offset) ordered per doc."""

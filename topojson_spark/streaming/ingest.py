@@ -218,17 +218,6 @@ def stream_sessionize(
     )
 
 
-def span_stats_stream(documents_stream: DataFrame) -> DataFrame:
-    """Per-kind running span counts — the streaming observability surface
-    (counts per micro-batch window; complete-mode aggregation)."""
-    spans = documents_stream.select(
-        F.posexplode("spans").alias("span_ix", "span")
-    )
-    return spans.groupBy(F.col("span.kind").alias("kind")).agg(
-        F.count(F.lit(1)).alias("n_spans")
-    )
-
-
 def stream_text_curation(
     documents_stream: DataFrame,
     min_tokens: int = 3,
